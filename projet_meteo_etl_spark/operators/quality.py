@@ -233,9 +233,12 @@ def run_expectations(
 ) -> dict[str, Any]:
     """Evaluate all expectations in ONE aggregation pass.
 
-    Returns ``{"passed": bool, "checks": [Check...], "error_rate_pct":
-    float}`` where the error rate is the reference's A7 metric
-    (quality_audit.py:61-69): range-violations / total × 100.
+    Returns ``{"passed": bool, "checks": [Check...], "total": int,
+    "error_rate_pct": float}`` where the error rate is the reference's
+    A7 metric (quality_audit.py:61-69): range-violations / total × 100.
+    ``total`` is the audited frame's row count: run over a sink read
+    back, it is the sink count, so the same pass serves the count
+    reconcile (``pipeline.run_full_etl``).
     """
     measures: dict[str, Column] = {"__total": F.count(F.lit(1))}
     for e in expectations:

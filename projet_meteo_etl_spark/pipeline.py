@@ -2,17 +2,23 @@
 
 ``run_full_etl`` in the reference (``/root/reference/etl_meteo.py:292-332``)
 is a sequential script: loop 14 CSVs → pandas clean → list-extend → JSON
-→ list-extend → integrity prints → Mongo truncate-insert → audit scans.
+→ list-extend → integrity prints → Mongo truncate-insert → audit scans
+against the loaded collection (``quality_audit.py``).
 
-Here the whole thing is ONE lazily-built DataFrame DAG:
+Here the whole thing is ONE lazily-built DataFrame DAG, run in a fixed
+number of Spark jobs whatever the number of stations:
 
-    read(csv manifest)  ┐
-                        ├─ clean/convert (pure Column exprs)
-    read(nested json)   ┘
-        → unionByName → filter(ts not null)
-        → [quality report: one fused agg]
-        → write parquet (overwrite) → count reconcile
+    read(csv manifests, all stations: one scan)  ┐
+                                                 ├─ clean/convert (pure Column exprs)
+    read(nested json)                            ┘
+        → unionByName → filter(ts not null)          (no cache)
+        → observe(count) → write parquet/JDBC (overwrite)
+        → read the sink back → [quality report: one fused agg]
 
+The source count is an observed metric of the write itself (the rows
+that entered the writer), and the audit runs on the sink readback, like
+the reference's audits on the loaded collection: its row total is the
+sink count, so one pass gives both the count reconcile and the report.
 The only shuffles are the grand-total quality aggregates (1-group, so
 they reduce map-side); everything else is embarrassingly parallel over
 file splits.  At 100 TB the same plan holds: more files → more splits.
@@ -22,7 +28,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -103,8 +109,30 @@ def unify(*sources: DataFrame) -> DataFrame:
     return df
 
 
+def build_unified(
+    spark: SparkSession,
+    csv_manifests: dict[str, dict[str, str]],
+    json_path: str | None,
+) -> DataFrame:
+    """Read → clean → unify: the lazy unified table of every CSV station
+    (one scan, :func:`read_weather_csv`) and the optional JSON dump."""
+    parts = [clean_weather_csv(read_weather_csv(spark, csv_manifests))]
+    if json_path is not None:
+        parts.append(clean_weather_json(read_weather_json(spark, json_path)))
+    return unify(*parts)
+
+
 @dataclass
 class EtlResult:
+    """Outcome of :func:`run_full_etl`.
+
+    ``unified`` is the lazy, uncached plan the sink was written from:
+    every action on it re-reads the sources.  ``source_count`` is the
+    number of rows that entered the writer; ``sink_count`` and
+    ``quality_report`` describe the sink as read back, as the
+    reference's audits described the loaded collection.
+    """
+
     unified: DataFrame
     output_path: str
     source_count: int
@@ -130,31 +158,27 @@ def run_full_etl(
     ``csv_manifests`` maps station_id → {date: csv_path} (the reference
     hardcodes two stations, etl_meteo.py:16-33).  Writes the unified
     table to ``output_path`` (parquet, overwrite = the truncate-and-load
-    S5 semantics) and returns counts + a quality report computed in one
-    fused aggregation pass (vs the reference's 10 separate scans).
+    S5 semantics), counting the written rows with an observed metric,
+    then reads the sink back and computes the count reconcile and the
+    quality report in one fused aggregation pass over it (vs the
+    reference's 10 separate scans).
 
     ``jdbc_url`` switches the sink to an external DB — the reference's
     actual S5/S6 shape (MongoDB truncate-and-load + ping,
     etl_meteo.py:182-218): healthcheck first, fail fast if unreachable,
-    overwrite-load ``jdbc_table``, and reconcile the count by reading
-    the SINK back (not the in-memory frame).  ``output_path`` is
-    ignored in that mode.
+    overwrite-load ``jdbc_table``, and audit the table read back from
+    the DB.  ``output_path`` is ignored in that mode.
     """
     from projet_meteo_etl_spark.operators.quality import (
         WEATHER_EXPECTATIONS,
         run_expectations,
     )
 
-    parts = [
-        clean_weather_csv(read_weather_csv(spark, manifest, station_id))
-        for station_id, manifest in csv_manifests.items()
-    ]
-    if json_path is not None:
-        parts.append(clean_weather_json(read_weather_json(spark, json_path)))
+    unified = build_unified(spark, csv_manifests, json_path)
+    written = Observation("weather_etl_source")
+    observed = unified.observe(written, F.count(F.lit(1)).alias("rows"))
 
-    unified = unify(*parts)
-    unified.cache()  # reused by: count, quality report, write
-
+    # S5: truncate-and-load
     if jdbc_url is not None:
         # S6: ping before any compute, like the reference's early exit
         from projet_meteo_etl_spark.sources.jdbc_sink import (
@@ -165,23 +189,21 @@ def run_full_etl(
 
         if not jdbc_healthcheck(spark, jdbc_url):
             raise ConnectionError(f"JDBC sink unreachable: {jdbc_url}")
-
-    source_count = unified.count()
-    report = run_expectations(unified, WEATHER_EXPECTATIONS)
-
-    # S5: truncate-and-load
-    if jdbc_url is not None:
-        write_jdbc_truncate_load(unified, jdbc_url, jdbc_table)
-        sink_count = read_jdbc_table(spark, jdbc_url, jdbc_table).count()
+        write_jdbc_truncate_load(observed, jdbc_url, jdbc_table)
+        sink = read_jdbc_table(spark, jdbc_url, jdbc_table)
         output_path = f"{jdbc_url}::{jdbc_table}"
     else:
-        unified.write.mode("overwrite").parquet(output_path)
-        sink_count = spark.read.parquet(output_path).count()
+        observed.write.mode("overwrite").parquet(output_path)
+        # explicit schema: the readback runs no schema-inference job
+        sink = spark.read.schema(UNIFIED_SCHEMA).parquet(output_path)
 
+    # the audit cannot ride on the observation: expect_unique's
+    # countDistinct is not allowed in observed metrics
+    report = run_expectations(sink, WEATHER_EXPECTATIONS)
     return EtlResult(
         unified=unified,
         output_path=output_path,
-        source_count=source_count,
-        sink_count=sink_count,
+        source_count=written.get["rows"],
+        sink_count=report["total"],
         quality_report=report,
     )

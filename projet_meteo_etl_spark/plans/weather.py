@@ -119,24 +119,14 @@ _EXPECTED_PARQUET = _fixtures()["expected_path"]
 def weather_etl_unified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full EP1: multi-source read → clean → union; returns the unified
     table ordered by (station, ts) for a stable rows-only signature."""
-    from projet_meteo_etl_spark.pipeline import (
-        clean_weather_csv,
-        clean_weather_json,
-        unify,
-    )
-    from projet_meteo_etl_spark.sources.weather_csv import read_weather_csv
-    from projet_meteo_etl_spark.sources.weather_json import read_weather_json
-
     from projet_meteo_etl_spark.catalog import harden_session
+    from projet_meteo_etl_spark.pipeline import build_unified
 
     harden_session(spark)  # driver gate sessions default to ANSI mode
     fx = _fixtures()
-    parts = [
-        clean_weather_csv(read_weather_csv(spark, manifest, station_id))
-        for station_id, manifest in fx["csv_manifests"].items()
-    ]
-    parts.append(clean_weather_json(read_weather_json(spark, fx["json_path"])))
-    return unify(*parts).orderBy("id_station", "date_heure_utc")
+    return build_unified(spark, fx["csv_manifests"], fx["json_path"]).orderBy(
+        "id_station", "date_heure_utc"
+    )
 
 
 def weather_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:

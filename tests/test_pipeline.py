@@ -4,7 +4,11 @@ assert count / nulls / types / date-range on the written table."""
 
 from __future__ import annotations
 
+import gc
+import os
+
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from projet_meteo_etl_spark.pipeline import (
@@ -114,22 +118,50 @@ def test_10_corrupt_and_missing_file_isolation(spark, weather_dir, tmp_path):
     """S2 fault isolation (reference etl_meteo.py:173-176 try/excepts
     each file): a structurally corrupt CSV and a nonexistent path in the
     manifest must not kill the read or change the good files' rows; an
-    all-missing manifest yields an empty frame, not an error."""
+    all-missing manifest yields an empty frame, not an error.  The
+    ``{station: {date: path}}`` map is read in one scan: every row
+    carries its own file's station and date, and a path listed under
+    two stations yields its rows under both."""
     from projet_meteo_etl_spark.sources.weather_csv import read_weather_csv
 
     man = dict(weather_dir["csv_manifests"]["1001"])
-    base = read_weather_csv(spark, man, "1001").count()
-    assert base > 0
+    base = read_weather_csv(spark, {"1001": man}).count()
+    assert base > 0 and base % len(man) == 0
+    per_file = base // len(man)  # every fixture file has the same rows
 
     corrupt = tmp_path / "corrupt.csv"
     corrupt.write_bytes(b"\x00\xff\xfe garbage\nnot;a;valid\nrow?\n\x01\x02")
     bad = dict(man)
     bad["2024-10-08"] = str(corrupt)
     bad["2024-10-09"] = str(tmp_path / "does_not_exist.csv")
-    assert read_weather_csv(spark, bad, "1001").count() == base
+    assert read_weather_csv(spark, {"1001": bad}).count() == base
 
     all_missing = {k: v + ".gone" for k, v in man.items()}
-    assert read_weather_csv(spark, all_missing, "1001").count() == 0
+    assert read_weather_csv(spark, {"1001": all_missing}).count() == 0
+
+    def per_key(manifests):
+        return {
+            (r["id_station"], r["Date"]): r["n"]
+            for r in read_weather_csv(spark, manifests)
+            .groupBy("id_station", "Date")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+
+    other = weather_dir["csv_manifests"]["1002"]
+    days = sorted(man)
+    two = {
+        "1001": {d: man[d] for d in days[:3]},
+        "1002": {d: other[d] for d in days[3:5]},
+    }
+    assert per_key(two) == {
+        (s, d): per_file for s, m in two.items() for d in m
+    }
+
+    shared = man[days[0]]
+    assert per_key(
+        {"A": {days[0]: shared}, "B": {days[0]: shared}}
+    ) == {("A", days[0]): per_file, ("B", days[0]): per_file}
 
 
 def test_all_missing_manifest_flows_through_clean(spark):
@@ -140,11 +172,70 @@ def test_all_missing_manifest_flows_through_clean(spark):
     from projet_meteo_etl_spark.sources.weather_csv import read_weather_csv
 
     raw = read_weather_csv(
-        spark, {"2024-10-01": "/nonexistent/a.csv"}, "1001"
+        spark, {"1001": {"2024-10-01": "/nonexistent/a.csv"}}
     )
     out = clean_weather_csv(raw)
     assert out.count() == 0
     assert out.columns[0] == "date_heure_utc"
+
+
+def _cache_entries(spark) -> int:
+    """Entries in the session's CacheManager (a private list, read
+    through JVM reflection) after unreachable frames are finalized."""
+    gc.collect()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    cached = cm.getClass().getDeclaredField("cachedData")
+    cached.setAccessible(True)
+    return cached.get(cm).size()
+
+
+def test_run_full_etl_leaves_no_cache(spark, weather_dir, tmp_path):
+    """The call caches nothing: the unified plan is written once, and
+    the audit reads the sink, so no cache entry outlives the call."""
+    before = _cache_entries(spark)
+    res = run_full_etl(
+        spark,
+        csv_manifests=weather_dir["csv_manifests"],
+        json_path=weather_dir["json_path"],
+        output_path=str(tmp_path / "out.parquet"),
+    )
+    assert _cache_entries(spark) == before
+    assert res.unified.storageLevel == StorageLevel(False, False, False, False)
+    assert res.count_reconciled
+
+
+def _etl_jobs(spark, manifests, json_path, out) -> int:
+    """Spark jobs one ``run_full_etl`` call runs under its own job group."""
+    sc = spark.sparkContext
+    group = f"etl-jobs-{len(manifests)}-{os.path.basename(out)}"
+    sc.setJobGroup(group, group)
+    try:
+        res = run_full_etl(spark, manifests, json_path, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert res.count_reconciled
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_job_count_independent_of_station_count(spark, weather_dir, tmp_path):
+    """One CSV scan for every station: the same fixed number of jobs
+    for 1 and for 4 stations, whatever the manifest holds."""
+    m1, m2 = (weather_dir["csv_manifests"][s] for s in ("1001", "1002"))
+    days = sorted(m1)
+    one = {"1001": m1}
+    four = {
+        "1001a": {d: m1[d] for d in days[:4]},
+        "1001b": {d: m1[d] for d in days[4:]},
+        "1002a": {d: m2[d] for d in days[:4]},
+        "1002b": {d: m2[d] for d in days[4:]},
+    }
+    json_path = weather_dir["json_path"]
+    n1 = _etl_jobs(spark, one, json_path, str(tmp_path / "one"))
+    n4 = _etl_jobs(spark, four, json_path, str(tmp_path / "four"))
+    assert n1 == n4 <= 7, (n1, n4)
 
 
 def test_weather_imputation_contract(spark):

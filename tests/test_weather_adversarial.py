@@ -42,7 +42,7 @@ def test_all_junk_csv_yields_empty_not_crash(spark, tmp_path):
         + "25:99;x;y;z;w;v\n"
         + "°;°;°;°;°;°\n",
     )
-    raw = read_weather_csv(spark, {"2024-01-01": p}, "S1")
+    raw = read_weather_csv(spark, {"S1": {"2024-01-01": p}})
     cleaned = clean_weather_csv(raw)
     assert cleaned.count() == 0
     assert cleaned.columns == [
@@ -61,10 +61,10 @@ def test_header_only_and_missing_files(spark, tmp_path):
         "2024-01-02": str(tmp_path / "absent_a.csv"),
         "2024-01-03": str(tmp_path / "absent_b.csv"),
     }
-    cleaned = clean_weather_csv(read_weather_csv(spark, manifest, "S1"))
+    cleaned = clean_weather_csv(read_weather_csv(spark, {"S1": manifest}))
     only_missing = clean_weather_csv(
         read_weather_csv(
-            spark, {"2024-01-01": str(tmp_path / "nope.csv")}, "S2"
+            spark, {"S2": {"2024-01-01": str(tmp_path / "nope.csv")}}
         )
     )
     u = unify(cleaned, only_missing)
@@ -83,7 +83,7 @@ def test_malformed_cells_null_not_poison(spark, tmp_path):
         + "1:00 AM;garbage;;29.92 inHg;5 mph;\n",
     )
     rows = clean_weather_csv(
-        read_weather_csv(spark, {"2024-01-02": p}, "S1")
+        read_weather_csv(spark, {"S1": {"2024-01-02": p}})
     ).orderBy("date_heure_utc").collect()
     assert len(rows) == 2
     r0, r1 = rows
@@ -97,6 +97,31 @@ def test_malformed_cells_null_not_poison(spark, tmp_path):
     assert r1["temperature_c"] is None                      # 'garbage'
     assert r1["humidite_pct"] is None                       # empty cell
     assert abs(r1["vent_vitesse_ms"] - 5 * 0.44704) < 1e-9
+
+
+def test_space_in_manifest_path_keeps_rows(spark, tmp_path):
+    """A manifest path with a space reaches the date join as a URI
+    (``%20``); both sides must compare in that one form, or every row
+    gets a null Date and the clean step drops them all silently."""
+    text = (
+        _HDR
+        + "°F;%;inHg;mph;in\n"
+        + "12:00 AM;50,0 °F;82 %;29,92 in;3,5 mph;0,01 in\n"
+        + "1:00 AM;51,0 °F;80 %;29,90 in;4,0 mph;0,00 in\n"
+    )
+    (tmp_path / "plain").mkdir()
+    (tmp_path / "with space").mkdir()
+    plain = _write(tmp_path / "plain" / "day.csv", text)
+    spaced = _write(tmp_path / "with space" / "a day.csv", text)
+
+    def cleaned(path):
+        return clean_weather_csv(
+            read_weather_csv(spark, {"S1": {"2024-01-02": path}})
+        ).orderBy("date_heure_utc").collect()
+
+    want = cleaned(plain)
+    assert len(want) == 2
+    assert cleaned(spaced) == want
 
 
 def test_empty_hourly_map_and_non_list_payloads(spark, tmp_path):
@@ -145,7 +170,8 @@ def test_empty_hourly_map_and_non_list_payloads(spark, tmp_path):
 def test_full_etl_on_degenerate_sources_reconciles(spark, tmp_path):
     """End-to-end: all-junk CSV + odd JSON through run_full_etl — the
     sink count must reconcile with the (tiny) surviving source count
-    and the quality report must come back, not crash."""
+    and the quality report must come back, not crash; an all-missing
+    manifest with no JSON reconciles at zero."""
     junk_csv = _write(
         tmp_path / "j.csv", _HDR + "°F;%;inHg;mph;in\n;;;;;\n"
     )
@@ -179,3 +205,14 @@ def test_full_etl_on_degenerate_sources_reconciles(spark, tmp_path):
     assert res.source_count == 2 == res.sink_count
     assert res.count_reconciled
     assert res.quality_report  # fused report computed, not skipped
+
+    # nothing at all reaches the writer: the observed count is 0, not
+    # missing, and the empty sink still reads back and audits
+    res = run_full_etl(
+        spark,
+        {"S1": {"2024-03-01": str(tmp_path / "absent.csv")}},
+        None,
+        str(tmp_path / "empty_parquet"),
+    )
+    assert res.source_count == 0 == res.sink_count
+    assert res.quality_report["total"] == 0
