@@ -5,15 +5,25 @@ Mirrors the reference's "one source per table" manifest pattern
 paths in, lazily-scanned DataFrames out.  Filters and projections applied
 downstream reach the parquet reader via Catalyst pushdown — check with
 ``df.explain()`` for ``PushedFilters`` / ``ReadSchema``.
+
+Schema cache: a plain ``spark.read.parquet`` runs a Spark job to infer
+the schema from the footers on every call, which at small per-query
+data is most of a query's fixed cost.  :func:`load_table` infers each
+table's schema once per session and supplies it to later reads, which
+then run no job.  The key is the session plus the table path's
+``(abspath, st_mtime_ns, st_size)``: a table rewritten at the same path
+changes its stat and is inferred again.
 """
 
 from __future__ import annotations
 
 import itertools
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, TimestampNTZType
 
 #: process-wide counter for :func:`unique_view` names
 _VIEW_SEQ = itertools.count()
@@ -61,12 +71,15 @@ def harden_session(spark: SparkSession) -> None:
       unparsable→null contract), not raise;
     - UTC session timezone: window starts / date parts must agree with
       the DuckDB oracle regardless of host timezone;
-    - nanosAsLong: events.parquet stores TIMESTAMP(NANOS).
+    - nanosAsLong: events.parquet stores TIMESTAMP(NANOS);
+    - cached-plan coalescing: AQE may size a persisted intermediate's
+      partitions like any other shuffle (see ``session.get_spark``).
     """
     for k, v in (
         ("spark.sql.ansi.enabled", "false"),
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+        ("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"),
     ):
         try:
             spark.conf.set(k, v)
@@ -74,8 +87,37 @@ def harden_session(spark: SparkSession) -> None:
             pass
 
 
+#: per-session inferred schemas: ``{session: {abspath: ((st_mtime_ns,
+#: st_size), StructType)}}``; an entry goes with its session, and a
+#: path's newer version replaces its older one
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema inferred once per
+    session and file version (see the module docstring).  A path that
+    cannot be stat-ed takes the plain read, so a missing table raises
+    the reader's own error."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key, stamp = os.path.abspath(path), (st.st_mtime_ns, st.st_size)
+    schemas = _SCHEMAS.setdefault(spark, {})
+    cached = schemas.get(key)
+    if cached is not None and cached[0] == stamp:
+        return spark.read.schema(cached[1]).parquet(path)
+    df = spark.read.parquet(path)
+    schemas[key] = (stamp, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet scan of one catalog table.
+
+    The first scan of a table in a session infers its schema (one Spark
+    job); later scans reuse it and run no job, until the table path's
+    stat (mtime, size) changes, e.g. when it is rewritten.
 
     ``events.ts`` is stored as parquet TIMESTAMP(NANOS); with
     ``spark.sql.legacy.parquet.nanosAsLong`` it surfaces as a nanosecond
@@ -85,11 +127,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
     harden_session(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
-    ts_type = dict(df.dtypes).get("ts") if name == "events" else None
-    if ts_type == "bigint":
+    df = _read_parquet(spark, table_path(sf_dir, name))
+    types = {f.name: f.dataType for f in df.schema}
+    ts_type = types.get("ts") if name == "events" else None
+    if isinstance(ts_type, LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
+    elif isinstance(ts_type, TimestampNTZType):
         # parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) surfaces as
         # TIMESTAMP_NTZ in Spark 4; with the session pinned to UTC this
         # cast maps each wall-clock value to the identical instant DuckDB

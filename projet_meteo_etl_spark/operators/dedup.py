@@ -1222,16 +1222,18 @@ def winnow_fingerprint_pairs(
         .filter(F.col("pos") <= F.col("n_grams") - (w - 1))
         .select("doc_id", F.col("minh").alias("h"))
         .distinct()
+    )
+    fps = fps_all
+    cached = []
+    if max_df is not None:
         # the stop-fingerprint df aggregation AND the capped relation
         # both consume this — without the persist the whole explode +
         # sliding-min + distinct pipeline ran TWICE (once to find the
         # stop set, once to build the join input), which was the
         # round-12 ×1.6 regression when the df cap was added
-        .persist()
-    )
-    fps = fps_all
-    if max_df is not None:
-        fps = stop_shingle_filter(fps, max_df)
+        fps_all = fps_all.persist()
+        cached.append(fps_all)
+        fps = stop_shingle_filter(fps_all, max_df)
     fps = (
         fps.select("doc_id", F.col("h").alias("minh"))
         .persist()  # feeds both sides of the overlap self-join
@@ -1250,7 +1252,7 @@ def winnow_fingerprint_pairs(
         .filter(F.col("n_common") >= min_common)
         .orderBy("doc_a", "doc_b")
     )
-    return scoped_cache(out, fps, fps_all)
+    return scoped_cache(out, fps, *cached)
 
 
 WINNOW_SQL = r"""

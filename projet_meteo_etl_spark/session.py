@@ -36,6 +36,14 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE coalesce the shuffles under a persisted plan too.  With
+        # it off (Spark's default) a cached intermediate keeps
+        # spark.sql.shuffle.partitions partitions, so every build and
+        # rescan of a small cache schedules that many near-empty tasks.
+        # Safe at scale: AQE sizes cached partitions to the advisory size
+        # as it does every other shuffle, and a user-numbered
+        # repartition(n) is never coalesced.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # deliberate join strategy (guide §3.1/§9): let the planner pick
         # shuffled-hash over sort-merge when its size conditions hold —

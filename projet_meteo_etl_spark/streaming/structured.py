@@ -290,7 +290,8 @@ def _run_to_memory(
     drain: str = "available_now",
 ) -> DataFrame:
     """Drive a streaming DataFrame to completion into a memory sink and
-    return the sink table (a normal batch DataFrame).  Shuffle-partition
+    return the sink table (a normal batch DataFrame; the sink's temp
+    view is dropped, so its rows live as long as it).  Shuffle-partition
     count is pinned for the query's lifetime (bound at stream start) and
     restored afterwards.  With ``label``, state-operator progress
     metrics are accumulated into ``LAST_STATE_METRICS[label]``.
@@ -327,7 +328,11 @@ def _run_to_memory(
             LAST_STATE_METRICS[label] = acc
     finally:
         _restore_stream_confs(spark, old)
-    return spark.table(name)
+    # the returned plan holds the sink itself; the view only pinned its
+    # rows in driver memory for the rest of the session
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 # every _run_to_files output dir, removed at interpreter exit as a

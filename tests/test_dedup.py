@@ -420,3 +420,24 @@ def test_incremental_minhash_agrees_with_batch_lsh_on_cross_pairs(spark):
         elif b % INC_BATCH_MOD == 0 and a % INC_BATCH_MOD != 0:
             cross.add((b, a, r["jaccard"]))
     assert inc == cross
+
+
+def test_winnow_persists_fingerprints_only_when_capped(spark, monkeypatch):
+    """Uncapped, the fingerprint relation has one consumer and is not
+    persisted; the df cap gives it a second consumer and a cache.  Both
+    give the same pairs when the cap drops nothing."""
+    from tests.conftest import SF_SMOKE
+
+    cls = type(spark.range(1))
+    persist, calls = cls.persist, []
+
+    def counting_persist(self, *args, **kwargs):
+        calls.append(self)
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "persist", counting_persist)
+    uncapped = dedup.winnow_fingerprint_pairs(spark, SF_SMOKE, max_df=None)
+    assert len(calls) == 1  # the self-join input only
+    capped = dedup.winnow_fingerprint_pairs(spark, SF_SMOKE, max_df=10**9)
+    assert len(calls) == 3
+    assert _pairs(uncapped) == _pairs(capped)

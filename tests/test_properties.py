@@ -16,7 +16,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from projet_meteo_etl_spark.functions.cleaning import clean_numeric
-from projet_meteo_etl_spark.functions.portable import pround
+from projet_meteo_etl_spark.functions.portable import json_long, pround
 from projet_meteo_etl_spark.operators.dedup import word_shingles
 
 _SETTINGS = dict(
@@ -169,3 +169,29 @@ def test_shard_assignment_balance(spark):
     for r in rows:
         # hash assignment keeps every shard within 3x of fair share
         assert r.total_chars < 3 * total / N_SHARDS
+
+
+def test_json_long_under_ansi_nulls_dirty_tokens(spark):
+    """``json_long`` casts every token, so it must not raise under ANSI
+    (the Spark 4 default): dirty and overflowing tokens give NULL,
+    integer tokens their value."""
+    cases = [
+        ('{"k": "abc"}', None),
+        ('{"k": "12.5"}', None),
+        ('{"k": 12.5}', None),
+        ('{"k": "99999999999999999999"}', None),
+        ("{}", None),
+        ('{"k": 42}', 42),
+        ('{"k": " -7 "}', -7),
+        ('{"k": "+3"}', 3),
+    ]
+    df = spark.createDataFrame(
+        [(i, p) for i, (p, _) in enumerate(cases)], "i int, props string"
+    )
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        got = dict(df.select("i", json_long().alias("v")).collect())
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
+    assert [got[i] for i in range(len(cases))] == [v for _, v in cases]

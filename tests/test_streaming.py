@@ -16,6 +16,21 @@ def test_stream_tumbling_equals_batch(spark):
     assert stream_rows == batch_rows
 
 
+def test_memory_sink_views_do_not_accumulate(spark):
+    """Each run's memory-sink temp view is dropped: repeated streams
+    leave the session's views as they were, and every result still
+    equals the batch answer."""
+    def views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = views()
+    batch_rows = windows.events_tumbling_counts(spark, SF).collect()
+    results = [structured.stream_tumbling_counts(spark, SF) for _ in range(3)]
+    assert views() == before
+    for r in results:
+        assert r.collect() == batch_rows
+
+
 def test_stream_tumbling_update_mode_equals_batch_and_evicts_state(spark):
     """The update-mode twin must fold its per-batch update rows to the
     exact batch answer AND the 1-hour watermark must actually remove
